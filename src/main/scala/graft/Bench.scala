@@ -151,9 +151,10 @@ object Bench {
   }
 
   /** One measured query: in-suite seconds, success, shuffle-write bytes
-    * of the rep that produced the recorded time. */
+    * of the rep that produced the recorded time, and the measuring
+    * session's core count (its `defaultParallelism`). */
   private final case class QRes(
-      name: String, secs: Double, ok: Boolean, shuffleBytes: Long)
+      name: String, secs: Double, ok: Boolean, shuffleBytes: Long, cores: Int)
 
   /** Measure `names` (already sorted) in this JVM: untimed warmup pass,
     * then the timed pass with isolation between reps and a second rep
@@ -161,6 +162,7 @@ object Bench {
   private val RepeatAbove = 0.5
   private def measure(spark: SparkSession, names: Seq[String]): Seq[QRes] = {
     val dir = sfDir
+    val cores = spark.sparkContext.defaultParallelism
     // per-query shuffle-write tally: stage-completed events carry the
     // metrics; flushListenerBus before reading makes attribution exact
     val tally = new java.util.concurrent.atomic.AtomicLong
@@ -226,20 +228,21 @@ object Bench {
       if (ok1 && t1 > RepeatAbove) {
         isolate()
         val (t2, ok2, b2) = rep()
-        if (ok2 && t2 < t1) QRes(name, t2, ok = true, b2)
-        else QRes(name, t1, ok = true, b1)
-      } else QRes(name, t1, ok1, b1)
+        if (ok2 && t2 < t1) QRes(name, t2, ok = true, b2, cores)
+        else QRes(name, t1, ok = true, b1, cores)
+      } else QRes(name, t1, ok1, b1, cores)
     }
   }
 
   // ------------------------------------------------------------------
-  // Child-process plumbing. Fragments are TSV (name, secs, ok, bytes):
-  // trivially parseable, no JSON library needed.
+  // Child-process plumbing. Fragments are TSV (name, secs, ok, bytes,
+  // cores): trivially parseable, no JSON library needed.
   // ------------------------------------------------------------------
 
   private def writeFragment(path: String, rs: Seq[QRes]): Unit = {
     val body = rs.map(r =>
-      s"${r.name}\t${r.secs}\t${if (r.ok) 1 else 0}\t${r.shuffleBytes}\n")
+      s"${r.name}\t${r.secs}\t${if (r.ok) 1 else 0}\t${r.shuffleBytes}" +
+        s"\t${r.cores}\n")
       .mkString
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -254,7 +257,7 @@ object Bench {
         java.nio.file.Files.readAllLines(p)).asScala.toSeq
         .filter(_.nonEmpty).map { l =>
           val f = l.split('\t')
-          QRes(f(0), f(1).toDouble, f(2) == "1", f(3).toLong)
+          QRes(f(0), f(1).toDouble, f(2) == "1", f(3).toLong, f(4).toInt)
         })
   }
 
@@ -442,8 +445,9 @@ object Bench {
     // re-runs the bench at a lower core count for the scaling block and
     // its BENCH_FULL.json overwrite erased the only 32-core per-query
     // record of the full-bench-only queries (the IVM kernels). The
-    // suffixed artifacts survive a full driver cycle side by side.
-    val cpusTag = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // suffixed artifacts survive a full driver cycle side by side. The
+    // tag is the core count the measuring sessions actually ran with.
+    val cpusTag = results.map(_.cores).distinct.mkString("-")
     val byCores = fullPath.resolveSibling(
       fullPath.getFileName.toString
         .replaceFirst("\\.json$", "") + s"_c$cpusTag.json")

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Dev tool: measured scale behavior ABOVE the bench SF (SCALE.md §11).
   *
   * Every 100 TB claim in SCALE.md argues from plan shape; this harness
@@ -67,7 +69,7 @@ object ScaleStress {
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cpus.toInt * 16).toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.NanosAsLongKey, "true")
+      .config(Tables.NanosAsLongKey, "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -97,7 +99,7 @@ object ScaleStress {
     val copies = 0 until mult
 
     def scaled(name: String)(one: (DataFrame, Int) => DataFrame): Unit = {
-      val src = spark.read.parquet(s"$base/$name.parquet")
+      val src = Tables.parquet(spark, s"$base/$name.parquet")
       copies.map(i => one(src, i)).reduce(_.unionByName(_))
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
     }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -358,54 +359,38 @@ case class KmArgmin(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Imperative registration into an existing session (tests, notebooks). */
+/** The library's SQL functions — one list, installed imperatively by
+  * [[GraftFunctions.register]] (tests, notebooks, driver-built sessions)
+  * and at session build time by [[GraftExtensions]]. */
 object GraftFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "float_dot" -> { args => FloatDotProduct(args(0), args(1)) },
-    "float_cosine" -> { args => FloatCosineSimilarity(args(0), args(1)) },
-    "long_dot" -> { args => LongDotProduct(args(0), args(1)) },
-    "km_argmin" -> { args => KmArgmin(args(0), args(1)) },
-    "graft_hash60" -> Hash60.builder,
-    "rolling_hashes" -> RollingHashes.builder)
+  private[plans] val fns: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
+    Seq[(String, String, FunctionBuilder)](
+      ("float_dot", "graft.plans.VectorExpressions",
+        args => FloatDotProduct(args(0), args(1))),
+      ("float_cosine", "graft.plans.VectorExpressions",
+        args => FloatCosineSimilarity(args(0), args(1))),
+      ("long_dot", "graft.plans.VectorExpressions",
+        args => LongDotProduct(args(0), args(1))),
+      ("km_argmin", "graft.plans.VectorExpressions",
+        args => KmArgmin(args(0), args(1))),
+      ("graft_hash60", "graft.plans.Hash60Expression", Hash60.builder),
+      ("rolling_hashes", "graft.plans.RollingHashExpression", RollingHashes.builder)
+    ).map { case (name, cls, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls, name), builder)
+    }
 
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.plans.VectorExpressions", name),
-      builder)
+  def register(spark: SparkSession): Unit = fns.foreach { case (id, info, builder) =>
+    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` — injects the vector
-  * functions at session build time (the SparkSessionExtensions seam; rules
-  * and strategies would be injected here too). */
+/** `spark.sql.extensions=graft.plans.GraftExtensions` — injects the
+  * optimizer rule, the planner strategy and every [[GraftFunctions]] entry
+  * at session build time (the SparkSessionExtensions seam). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => CollapseIdempotentStringFns)
     ext.injectPlannerStrategy(_ => SessionizeStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("float_dot"),
-      new ExpressionInfo("graft.plans.VectorExpressions", "float_dot"),
-      (args: Seq[Expression]) => FloatDotProduct(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("float_cosine"),
-      new ExpressionInfo("graft.plans.VectorExpressions", "float_cosine"),
-      (args: Seq[Expression]) => FloatCosineSimilarity(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("long_dot"),
-      new ExpressionInfo("graft.plans.VectorExpressions", "long_dot"),
-      (args: Seq[Expression]) => LongDotProduct(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("km_argmin"),
-      new ExpressionInfo("graft.plans.VectorExpressions", "km_argmin"),
-      (args: Seq[Expression]) => KmArgmin(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hash60"),
-      new ExpressionInfo("graft.plans.Hash60Expression", "graft_hash60"),
-      Hash60.builder))
-    ext.injectFunction((
-      FunctionIdentifier("rolling_hashes"),
-      new ExpressionInfo("graft.plans.RollingHashExpression", "rolling_hashes"),
-      RollingHashes.builder))
+    GraftFunctions.fns.foreach(ext.injectFunction)
   }
 }

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.Tables
+
 /** Signature-keyed persistence for DERIVED ARTIFACTS the engine builds
   * once and serves many times — the ANN index (q_ivf_build/q_ivf_probe)
   * and the trained BPE merge table (q_bpe_encode).
@@ -28,7 +30,7 @@ object ArtifactStore {
     * built by the old recipe (which would surface as a confusing oracle
     * mismatch in the serving-path query, ADVICE r14). */
   def root(dir: String, table: String, name: String, recipe: String): String = {
-    val src = new java.io.File(graft.sources.Tables.path(dir, table))
+    val src = new java.io.File(Tables.path(dir, table))
     val sig = java.lang.Long.toHexString(
       src.length * 1000003L + src.lastModified)
     val rec = java.lang.Long.toHexString(
@@ -114,7 +116,7 @@ object ArtifactStore {
     val path = s"$base/${prefix}_${pidTag}_$nonce"
     df.write.mode("overwrite").parquet(path)
     registerSpillForExit(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   private val spilledDirs =

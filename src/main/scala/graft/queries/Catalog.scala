@@ -1255,7 +1255,7 @@ object Catalog {
     Dedup.bandsWeighted(base.withColumn("w", lit(1L)))
       .select(col("doc_id"), col("band"), col("bucket"))
       .write.mode("overwrite").parquet(s"$r/tband")
-    pairsFromBuckets(spark.read.parquet(s"$r/tband"))
+    pairsFromBuckets(Tables.parquet(spark, s"$r/tband"))
       .write.mode("overwrite").parquet(s"$r/tedges")
     // blob: per-doc aHash fingerprints and the base edge set
     val media = base.select(col("doc_id").as("media_id"),
@@ -1264,13 +1264,13 @@ object Catalog {
     graft.operators.MultimodalOps.perceptualHash(media).toDF()
       .select("media_id", "b0", "b1", "b2", "b3")
       .write.mode("overwrite").parquet(s"$r/bhash")
-    bandedHammingOver(spark.read.parquet(s"$r/bhash"))
+    bandedHammingOver(Tables.parquet(spark, s"$r/bhash"))
       .filter(col("hamming") <= BlobDupHam)
       .select(col("media_a").as("a"), col("media_b").as("b"))
       .write.mode("overwrite").parquet(s"$r/bedges")
     // joint closure over the union edge set, converged once
-    val pairs = spark.read.parquet(s"$r/tedges")
-      .unionByName(spark.read.parquet(s"$r/bedges")
+    val pairs = Tables.parquet(spark, s"$r/tedges")
+      .unionByName(Tables.parquet(spark, s"$r/bedges")
         .select(col("a").as("doc_a"), col("b").as("doc_b")))
     val edges = graft.Checkpoints.truncate(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
@@ -1341,7 +1341,7 @@ object Catalog {
     val base = docs.filter(col("doc_id") < cutoff)
     val stateRoot = ArtifactStore.ensure(spark, dir, "documents",
       "pmm_state", pmmRecipe)(pmmBuildState(spark, base))
-    val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
+    val r1 = Tables.parquet(spark, s"$stateRoot/meta").head().getLong(0)
     mark("p1")
 
     // exhibit: commit base then the new batch, learn the delta from the
@@ -1359,7 +1359,7 @@ object Catalog {
     val newB = Dedup.bandsWeighted(net.select(col("doc_id"), col("text"),
         col("w")))
       .select(col("doc_id"), col("band"), col("bucket"))
-    val baseB = spark.read.parquet(s"$stateRoot/tband")
+    val baseB = Tables.parquet(spark, s"$stateRoot/tband")
     val touched = newB.select("band", "bucket").distinct()
     val memT = baseB.join(broadcast(touched), Seq("band", "bucket"),
         "left_semi")
@@ -1397,7 +1397,7 @@ object Catalog {
         col("bb.band").as("band"), col("bb.bits").as("bits"))
     val newM = exploded(newPh)
     val touchedB = newM.select("band", "bits").distinct()
-    val memB = exploded(spark.read.parquet(s"$stateRoot/bhash"))
+    val memB = exploded(Tables.parquet(spark, s"$stateRoot/bhash"))
       .join(broadcast(touchedB), Seq("band", "bits"), "left_semi")
       .withColumn("nw", lit(false))
       .unionByName(newM.withColumn("nw", lit(true)))
@@ -1428,9 +1428,9 @@ object Catalog {
 
     // full edge sets = persisted base ∪ delta (disjoint by construction)
     val tcand = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/tedges").unionByName(dt))
+      Tables.parquet(spark, s"$stateRoot/tedges").unionByName(dt))
     val bpair = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/bedges").unionByName(db))
+      Tables.parquet(spark, s"$stateRoot/bedges").unionByName(db))
     val nDt = dt.count()
     val nDb = db.count()
 
@@ -1441,7 +1441,7 @@ object Catalog {
       pairsAll.select(col("doc_a").as("u"), col("doc_b").as("v"))
         .union(pairsAll.select(col("doc_b").as("u"), col("doc_a").as("v")))
         .repartition(col("v")), keepPartitioning = true)
-    val l0 = spark.read.parquet(s"$stateRoot/labels")
+    val l0 = Tables.parquet(spark, s"$stateRoot/labels")
     val init = l0.unionByName(
       edges.select(col("u")).distinct()
         .join(l0.select(col("u")), Seq("u"), "left_anti")

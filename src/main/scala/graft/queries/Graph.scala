@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Checkpoints.TruncateOps
+import graft.sources.Tables
 
 import Parity._
 
@@ -992,7 +993,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
     val dels0 = heldOut(base0, 37L, 43L).filter(col("held")).select("p", "s")
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "privm_state", privmRecipe)(privmBuildState(spark, base0))
-    val metaRow = spark.read.parquet(s"$stateRoot/meta").head()
+    val metaRow = Tables.parquet(spark, s"$stateRoot/meta").head()
     val (r1, vCnt) = (metaRow.getLong(0), metaRow.getLong(1))
     if (vCnt == 0L) {
       spark.range(0).select(col("id").as("node_id"), col("id").as("pr"),
@@ -1029,7 +1030,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         privmNetDelta(spark, root, tn))                 // O(delta) rows
       mark("feed")
 
-      val s1 = spark.read.parquet(s"$stateRoot/state")
+      val s1 = Tables.parquet(spark, s"$stateRoot/state")
       val (patched, dedges) = privmPatch(s1, dpairs, prBase)
       val delE = dedges.filter(col("sgn") < 0)
         .select(col("dsrc"), col("ddst"))
@@ -1048,7 +1049,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       val edgesFin: Option[DataFrame] =
         if (resumeBcast) None
         else {
-          val ef0 = spark.read.parquet(s"$stateRoot/edges")
+          val ef0 = Tables.parquet(spark, s"$stateRoot/edges")
             .join(broadcast(delE),
               col("src") === col("dsrc") && col("dst") === col("ddst"),
               "left_anti")
@@ -1141,7 +1142,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
         else
           ArtifactStore.ensure(spark, dir, "lineitem", "privm_state",
             stateRecipe)(buildState)
-      val metaRow = spark.read.parquet(s"$stateRoot/meta").head()
+      val metaRow = Tables.parquet(spark, s"$stateRoot/meta").head()
       val (r1, vCnt) = (metaRow.getLong(0), metaRow.getLong(1))
       if (vCnt == 0L) {
         graft.Checkpoints.release(ac)
@@ -1150,7 +1151,7 @@ ORDER BY pr DESC, node_id LIMIT 50"""
       } else {
         val eps = Scale / (PrEpsDiv * vCnt)
         val prBase = (Scale * 15L) / (100L * vCnt)
-        val s1 = spark.read.parquet(s"$stateRoot/state")
+        val s1 = Tables.parquet(spark, s"$stateRoot/state")
         mark("p1")
 
         // mutate: MERGE-delete (gen 2), append the held-out adds (gen 3)
@@ -1857,7 +1858,7 @@ ORDER BY f.node_id"""
     val adds = ac.filter(col("held")).select("p", "s")
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "civm_state", civmRecipe)(civmBuildState(spark, base0))
-    val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
+    val r1 = Tables.parquet(spark, s"$stateRoot/meta").head().getLong(0)
     mark("p1")
 
     val (t, tn, root) = privmFreshTable(spark, dir, "civm")
@@ -1871,11 +1872,11 @@ ORDER BY f.node_id"""
     val dedges = dpairs
       .select(col("p").as("u"), (col("s") + Off).as("v"))
       .unionByName(dpairs.select((col("s") + Off).as("u"), col("p").as("v")))
-    val edgesFin = spark.read.parquet(s"$stateRoot/edges")
+    val edgesFin = Tables.parquet(spark, s"$stateRoot/edges")
       .unionByName(dedges.select("u", "v"))
       .repartition(col("v"))
       .truncateLineagePartitioned
-    val l0 = spark.read.parquet(s"$stateRoot/labels")
+    val l0 = Tables.parquet(spark, s"$stateRoot/labels")
     // unseen endpoints (vertices the adds introduce) start as their own
     // component — the semilattice init the class comment requires
     val init = l0.unionByName(
@@ -1943,7 +1944,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     val dels = heldOut(ef, 37L, 43L).filter(col("held")).select("p", "s")
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "civm_del_state", civmDelRecipe)(civmBuildState(spark, ef))
-    val r1 = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
+    val r1 = Tables.parquet(spark, s"$stateRoot/meta").head().getLong(0)
     mark("p1")
 
     val (t, tn, root) = privmFreshTable(spark, dir, "civmd")
@@ -1963,7 +1964,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
       .select(col("p").as("u"), (col("s") + Off).as("v"))
       .unionByName(dpairs.select((col("s") + Off).as("u"),
         col("p").as("v"))))
-    val l0 = spark.read.parquet(s"$stateRoot/labels")
+    val l0 = Tables.parquet(spark, s"$stateRoot/labels")
     mark("delta")
 
     val res =
@@ -1982,7 +1983,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
           .select(col("lbl")).distinct()
         val nAff = affected.count()
         val affV = l0.join(broadcast(affected), Seq("lbl")).select(col("u"))
-        val remEdges = spark.read.parquet(s"$stateRoot/edges")
+        val remEdges = Tables.parquet(spark, s"$stateRoot/edges")
           .join(broadcast(affV), Seq("u"), "left_semi")
           .join(broadcast(dedges.select(col("u"), col("v"))),
             Seq("u", "v"), "left_anti")
@@ -2194,7 +2195,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
     val adds = ac.filter(col("held")).select("p", "s")
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "bfsivm_state", bfsIvmRecipe)(bfsIvmBuildState(spark, base0))
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
+    val meta = Tables.parquet(spark, s"$stateRoot/meta").head()
     val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
     mark("p1")
     if (vCnt == 0L) {
@@ -2214,14 +2215,14 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
         .unionByName(dpairs.select((col("s") + Off).as("u"),
           col("p").as("v")))
       val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
-      val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
+      val edgesFin0 = Tables.parquet(spark, s"$stateRoot/edges")
         .unionByName(dedges.select(col("u").as("src"), col("v").as("dst")))
       val edgesFin =
         if (bcastV) edgesFin0.truncateLineage
         else edgesFin0.repartition(col("src")).truncateLineagePartitioned
       // re-activate exactly the delta endpoints: pd = dist + 1 ≠ dist,
       // so their out-edges relax in round 1 and improvements ripple out
-      val init = spark.read.parquet(s"$stateRoot/dist")
+      val init = Tables.parquet(spark, s"$stateRoot/dist")
         .join(broadcast(dedges.select(col("u")).distinct()),
           col("node_id") === col("u"), "left")
         .select(col("node_id"), col("dist"),
@@ -2229,7 +2230,7 @@ SELECT u AS node_id, component_id FROM comp ORDER BY node_id"""),
             .otherwise(col("dist")).as("pd"))
       mark("delta")
       val g = PrGraph(edgesFin,
-        spark.read.parquet(s"$stateRoot/dist").select(col("node_id")),
+        Tables.parquet(spark, s"$stateRoot/dist").select(col("node_id")),
         GraphAdaptive.pick(bcastV) _)
       val (d2, r2) = bfsRelaxLoop(spark, g, init)
       mark(s"resume:r1=$r1:r2=$r2")
@@ -2398,7 +2399,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       .distinct())
     val dels = heldOut(ef, 37L, 43L).filter(col("held")).select("p", "s")
     val stateRoot = bfsIvmDelStateRoot(spark, dir)
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
+    val meta = Tables.parquet(spark, s"$stateRoot/meta").head()
     val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
     mark("p1")
     if (vCnt == 0L) {
@@ -2422,7 +2423,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
         .select(col("p").as("u"), (col("s") + Off).as("v"))
         .unionByName(dpairs.select((col("s") + Off).as("u"),
           col("p").as("v"))))
-      val st = spark.read.parquet(s"$stateRoot/dist") // (node_id, dist, par)
+      val st = Tables.parquet(spark, s"$stateRoot/dist") // (node_id, dist, par)
       mark("delta")
       val res =
         if (dedges.head(1).isEmpty) {
@@ -2479,7 +2480,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           waveCks.foreach(graft.Checkpoints.release)
           val pickD = pickN(nDirty) _
           val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
-          val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
+          val edgesFin0 = Tables.parquet(spark, s"$stateRoot/edges")
             .join(pickN(nDel)(dedges.select(col("u").as("src"),
               col("v").as("dst"))), Seq("src", "dst"), "left_anti")
           val edgesFin =
@@ -2566,7 +2567,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     // the delete variant's parent-carrying state builder, on THIS base
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "bfsivm_mx_state", bfsIvmMixedRecipe)(bfsIvmDelBuildState(spark, base0))
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
+    val meta = Tables.parquet(spark, s"$stateRoot/meta").head()
     val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
     mark("p1")
     if (vCnt == 0L) {
@@ -2594,7 +2595,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
         directed(dpairs.filter(col("sgn") < 0)))
       val dedgesA = graft.Checkpoints.truncate(
         directed(dpairs.filter(col("sgn") > 0)))
-      val st = spark.read.parquet(s"$stateRoot/dist")
+      val st = Tables.parquet(spark, s"$stateRoot/dist")
       mark("delta")
       val res =
         if (dedgesD.head(1).isEmpty && dedgesA.head(1).isEmpty) {
@@ -2640,7 +2641,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           waveCks.foreach(graft.Checkpoints.release)
           val pickD = pickN(nDirty) _
           val bcastV = GraphAdaptive.broadcastOk(spark, vCnt)
-          val edgesFin0 = spark.read.parquet(s"$stateRoot/edges")
+          val edgesFin0 = Tables.parquet(spark, s"$stateRoot/edges")
             .join(pickN(nDelE)(dedgesD.select(col("u").as("src"),
               col("v").as("dst"))), Seq("src", "dst"), "left_anti")
             .unionByName(dedgesA
@@ -2848,7 +2849,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           .filter(col("sgn") > 0).select(col("u"), col("v"))
       }
     }
-    val baseCnt = spark.read.parquet(s"$stateRoot/counts")
+    val baseCnt = Tables.parquet(spark, s"$stateRoot/counts")
     mark("delta")
     val res =
       if (dedges.head(1).isEmpty) {
@@ -2863,7 +2864,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
         // broadcast semi-join — the maintenance never re-closes it
         val ends = dedges.select(col("u").as("n"))
           .unionByName(dedges.select(col("v").as("n"))).distinct()
-        val finE = spark.read.parquet(s"$stateRoot/edges")
+        val finE = Tables.parquet(spark, s"$stateRoot/edges")
           .unionByName(dedges)
         val touched = finE.select(col("u").as("src"), col("v").as("dst"))
           .unionByName(finE.select(col("v").as("src"), col("u").as("dst")))
@@ -2990,7 +2991,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           .filter(col("sgn") < 0).select(col("u"), col("v"))
       }
     }
-    val baseCnt = spark.read.parquet(s"$stateRoot/counts")
+    val baseCnt = Tables.parquet(spark, s"$stateRoot/counts")
     mark("delta")
     val res =
       if (dedges.head(1).isEmpty) {
@@ -3003,9 +3004,9 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
         // PRE-delete adjacency restricted to the deleted edges' endpoints
         val ends = dedges.select(col("u").as("n"))
           .unionByName(dedges.select(col("v").as("n"))).distinct()
-        val touched = spark.read.parquet(s"$stateRoot/edges")
+        val touched = Tables.parquet(spark, s"$stateRoot/edges")
           .select(col("u").as("src"), col("v").as("dst"))
-          .unionByName(spark.read.parquet(s"$stateRoot/edges")
+          .unionByName(Tables.parquet(spark, s"$stateRoot/edges")
             .select(col("v").as("src"), col("u").as("dst")))
           .join(broadcast(ends), col("src") === col("n"), "left_semi")
         val adj = touched.groupBy("src")
@@ -3119,7 +3120,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       spark: SparkSession, base0: DataFrame)(r: String): Unit = {
     val pairs = base0.select(col("p").as("u"), (col("s") + Off).as("v"))
     pairs.write.mode("overwrite").parquet(s"$r/pairs")
-    val pr = spark.read.parquet(s"$r/pairs")
+    val pr = Tables.parquet(spark, s"$r/pairs")
     val v = pr.select(col("u").as("n"))
       .unionByName(pr.select(col("v").as("n"))).distinct().count()
     val bcast = GraphAdaptive.broadcastOk(spark, v)
@@ -3162,7 +3163,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
     val adds = ac.filter(col("held")).select("p", "s")
     val stateRoot = ArtifactStore.ensure(spark, dir, "lineitem",
       "lpivm_state", lpIvmRecipe)(lpIvmBuildState(spark, base0))
-    val meta = spark.read.parquet(s"$stateRoot/meta").head()
+    val meta = Tables.parquet(spark, s"$stateRoot/meta").head()
     val (r1, vCnt) = (meta.getLong(0), meta.getLong(1))
     mark("p1")
     if (vCnt == 0L) {
@@ -3178,7 +3179,7 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
       graft.Checkpoints.release(ac)
       val dpairs = graft.Checkpoints.truncate(
         privmNetDelta(spark, root, tn))
-      val lpBase = spark.read.parquet(s"$stateRoot/lp")
+      val lpBase = Tables.parquet(spark, s"$stateRoot/lp")
       mark("delta")
       val res =
         if (dpairs.head(1).isEmpty) {
@@ -3194,13 +3195,13 @@ FROM it GROUP BY node_id ORDER BY hop, node_id"""),
           val dEnds = dpairs.select(col("p").as("u"))
             .unionByName(dpairs.select((col("s") + Off).as("u"))).distinct()
           val duv = dpairs.select(col("p").as("u"), (col("s") + Off).as("v"))
-          val basePairs = spark.read.parquet(s"$stateRoot/pairs")
+          val basePairs = Tables.parquet(spark, s"$stateRoot/pairs")
           val finPairs = basePairs.unionByName(duv)
           val compEdges = graft.Checkpoints.truncate(
             finPairs.unionByName(
                 finPairs.select(col("v").as("u"), col("u").as("v")))
               .repartition(col("v")), keepPartitioning = true)
-          val c0 = spark.read.parquet(s"$stateRoot/comp")
+          val c0 = Tables.parquet(spark, s"$stateRoot/comp")
           val cInit = c0.unionByName(
             compEdges.select(col("u")).distinct()
               .join(c0.select(col("u")), Seq("u"), "left_anti")

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 import Parity._
 
 /** Physical-layout operators: Z-order (Morton) multi-dimensional
@@ -137,7 +139,7 @@ object Layout {
       |""".stripMargin.trim),
     (spark, dir) => {
       val out = compactedOrdersPath(spark, dir)
-      spark.read.parquet(out)
+      Tables.parquet(spark, out)
         .agg(count(lit(1)).as("n"),
           countDistinct(col("o_custkey")).as("n_cust"),
           dsum(dec("o_totalprice")).as("sum_price"),
@@ -160,7 +162,7 @@ object Layout {
       .write.mode("overwrite").parquet(small)
     val totalBytes = dataFiles(spark, small).map(_.getLen).sum
     val target = math.max(1L, (totalBytes + TargetFileBytes - 1) / TargetFileBytes).toInt
-    spark.read.parquet(small)
+    Tables.parquet(spark, small)
       .coalesce(target)
       .write.mode("overwrite").parquet(out)
     out

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.PortableHash
+import graft.sources.Tables
 import Parity._
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.4).
@@ -603,7 +604,7 @@ ORDER BY query_id, rnk"""
   /** Probe-side index resolution: reuse a completed build, else build.
     * (Verify may run q_ivf_probe before q_ivf_build; the index content is
     * deterministic, so either order yields the same stored tables.) */
-  private def ensureIvfIndex(spark: SparkSession, dir: String): String =
+  private[graft] def ensureIvfIndex(spark: SparkSession, dir: String): String =
     ArtifactStore.ensure(spark, dir, "embeddings", "ivf_index", ivfRecipe)(
       ivfBuildInto(spark, dir))
 
@@ -627,9 +628,9 @@ FROM cellstats s JOIN cents c ON c.cid = s.cid
 ORDER BY s.cid"""),
     (spark, dir) => {
       val root = ivfWriteIndex(spark, dir)
-      val assign = spark.read.parquet(s"$root/assign")
+      val assign = Tables.parquet(spark, s"$root/assign")
         .select(col("vec_id"), col("dot_c"), col("cid").cast("long").as("cid"))
-      val cents = spark.read.parquet(s"$root/centroids")
+      val cents = Tables.parquet(spark, s"$root/centroids")
       assign.groupBy("cid")
         .agg(count(lit(1)).as("n_vecs"), min("vec_id").as("min_vec"),
           max("vec_id").as("max_vec"), sum("dot_c").as("sum_dot"))
@@ -653,9 +654,9 @@ ORDER BY s.cid"""),
       // function registry (long_dot) must be installed explicitly
       graft.plans.GraftFunctions.register(spark)
       val root = ensureIvfIndex(spark, dir)
-      val assign = spark.read.parquet(s"$root/assign")
+      val assign = Tables.parquet(spark, s"$root/assign")
         .select(col("vec_id"), col("qv"), col("cid").cast("long").as("cid"))
-      val centarr = spark.read.parquet(s"$root/centroids")
+      val centarr = Tables.parquet(spark, s"$root/centroids")
         .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("cl"))
       val wprobe = Window.partitionBy("query_id").orderBy(desc("pdot"), asc("pcid"))
       val probes = assign.filter(col("vec_id") < NumQueries)
@@ -737,13 +738,13 @@ ORDER BY s.cid"""),
     // the new batch assigns against the FROZEN centroids: one broadcast
     // of the packed centroid array, one map-only projection — the base
     // postings are never re-read for maintenance, only for the probe
-    val centarr = spark.read.parquet(s"$stateRoot/centroids")
+    val centarr = Tables.parquet(spark, s"$stateRoot/centroids")
       .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("cl"))
     val newAssign = graft.Checkpoints.truncate(
       ivfAssign(ivfScoredWith(emb.filter(col("vec_id") >= cutoff), centarr))
         .select(col("vec_id"), col("qv"), col("cid")))
     mark(s"delta:n=${newAssign.count()}")
-    val assign = spark.read.parquet(s"$stateRoot/assign")
+    val assign = Tables.parquet(spark, s"$stateRoot/assign")
       .select(col("vec_id"), col("qv"), col("cid").cast("long").as("cid"))
       .unionByName(newAssign)
     // the stored-index probe (q_ivf_probe's plan) over base ∪ delta

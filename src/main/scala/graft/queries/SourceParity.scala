@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 import Parity._
 
 /** Non-parquet FILE SOURCES under the driver's correctness gate.
@@ -38,7 +40,7 @@ object SourceParity {
       format: String, options: Map[String, String],
       cached: Boolean = false): DataFrame = {
     val src = tbl(spark, dir, table)
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, table))
+    val srcFile = new java.io.File(Tables.path(dir, table))
     val sig = java.lang.Long.toHexString(
       srcFile.length * 1000003L + srcFile.lastModified)
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -137,7 +139,7 @@ object SourceParity {
         s"graft_sink_part_orders_${Integer.toHexString(dir.hashCode)}")
         .toString
       src.write.partitionBy("o_orderpriority").mode("overwrite").parquet(tmp)
-      spark.read.parquet(tmp)
+      Tables.parquet(spark, tmp)
         .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"), dsum(dec("o_totalprice")).as("sum_price"))
@@ -265,7 +267,7 @@ object SourceParity {
     (spark, dir) => {
       import spark.implicits._
       val src = tbl(spark, dir, "orders")
-      val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
+      val srcFile = new java.io.File(Tables.path(dir, "orders"))
       val sig = java.lang.Long.toHexString(
         srcFile.length * 1000003L + srcFile.lastModified)
       val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -285,8 +287,8 @@ object SourceParity {
           ("3-MEDIUM", "standard"), ("4-NOT SPECIFIED", "standard"),
           ("5-LOW", "standard")).toDF("prio", "svc_class")
           .coalesce(1).write.mode("overwrite").parquet(s"$root/svc")
-      val svc = spark.read.parquet(s"$root/svc")
-      spark.read.parquet(s"$root/orders")
+      val svc = Tables.parquet(spark, s"$root/svc")
+      Tables.parquet(spark, s"$root/orders")
         .join(broadcast(svc.filter($"svc_class" === "expedite")),
           col("o_orderpriority") === col("prio"))
         .groupBy("o_orderpriority")
@@ -475,7 +477,7 @@ object SourceParity {
 
   /** Pay-once hive-partitioned graft-tsv export for q_dsv2_agg_group. */
   private def metaAggGroupExport(spark: SparkSession, dir: String): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
+    val srcFile = new java.io.File(Tables.path(dir, "orders"))
     val sig = java.lang.Long.toHexString(
       srcFile.length * 1000003L + srcFile.lastModified)
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -494,7 +496,7 @@ object SourceParity {
     * metadata path answers from; `_SUCCESS` + fingerprint cache as for
     * the other exports). */
   private def metaAggExport(spark: SparkSession, dir: String): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
+    val srcFile = new java.io.File(Tables.path(dir, "orders"))
     val sig = java.lang.Long.toHexString(
       srcFile.length * 1000003L + srcFile.lastModified)
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -512,7 +514,7 @@ object SourceParity {
   /** Pay-once hive-layout TSV export for q_dsv2_partitioned (same
     * _SUCCESS + source-fingerprint cache as the other exports). */
   private def dsv2PartitionedExport(spark: SparkSession, dir: String): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
+    val srcFile = new java.io.File(Tables.path(dir, "orders"))
     val sig = java.lang.Long.toHexString(
       srcFile.length * 1000003L + srcFile.lastModified)
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -589,7 +591,7 @@ object SourceParity {
     * _SUCCESS + source-fingerprint cache as the other exports). */
   private def spjExport(spark: SparkSession, dir: String, table: String,
       partCol: String)(sel: DataFrame => DataFrame): String = {
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, table))
+    val srcFile = new java.io.File(Tables.path(dir, table))
     val sig = java.lang.Long.toHexString(
       srcFile.length * 1000003L + srcFile.lastModified)
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
@@ -1553,7 +1555,7 @@ object SourceParity {
     * construction. */
   private def dsv2OrdersExport(spark: SparkSession, dir: String): String = {
     val src = tbl(spark, dir, "orders")
-    val srcFile = new java.io.File(graft.sources.Tables.path(dir, "orders"))
+    val srcFile = new java.io.File(Tables.path(dir, "orders"))
     val sig = java.lang.Long.toHexString(
       srcFile.length * 1000003L + srcFile.lastModified)
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),

@@ -604,7 +604,7 @@ object StreamingParity {
         (dec("o_totalprice") * 2).cast("string").as("price2_str"))
         .repartitionByRange(3, col("o_orderkey"))
         .write.mode("overwrite").parquet(s"$tmp/feed")
-      val feedSchema = spark.read.parquet(s"$tmp/feed").schema
+      val feedSchema = Tables.parquet(spark, s"$tmp/feed").schema
       val q = spark.readStream.schema(feedSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$tmp/feed")

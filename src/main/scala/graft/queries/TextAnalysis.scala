@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Aggregators, PortableHash}
+import graft.sources.Tables
 import Parity._
 
 /** Text-analysis operators over the `documents` corpus (SURVEY.md §2.4):
@@ -565,7 +566,7 @@ object TextAnalysis {
     val base = docs.filter(col("doc_id") % 3 =!= 0)
     val stateRoot = ArtifactStore.ensure(spark, dir, "documents",
       "bm25ivm_state", bm25IvmRecipe)(bm25BuildState(spark, base))
-    val nBase = spark.read.parquet(s"$stateRoot/meta").head().getLong(0)
+    val nBase = Tables.parquet(spark, s"$stateRoot/meta").head().getLong(0)
     mark("p1")
 
     // the CDC lifecycle: snapshot → DELETE → append → text-rewriting
@@ -601,14 +602,14 @@ object TextAnalysis {
     mark(s"apply:n=$nApplied:neg=$nNeg")
 
     val dl1 = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/dl")
+      Tables.parquet(spark, s"$stateRoot/dl")
         .join(ddl, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
           (coalesce(col("dl"), lit(0L)) + coalesce(col("ddl"), lit(0L)))
             .as("dl"))
         .filter(col("dl") > 0))
     val tf1 = graft.Checkpoints.truncate(
-      spark.read.parquet(s"$stateRoot/tf")
+      Tables.parquet(spark, s"$stateRoot/tf")
         .join(dtf, Seq("doc_id", "term"), "full_outer")
         .select(col("doc_id"), col("term"),
           (coalesce(col("tf"), lit(0L)) + coalesce(col("dtf"), lit(0L)))
@@ -2126,7 +2127,7 @@ UNION ALL SELECT CAST(${BpeMerges + 2} AS BIGINT), '<n_symbols>', '',
         merges.toDF("step", "p1", "p2", "cnt")
           .coalesce(1).write.mode("overwrite").parquet(s"$r/merges")
     }
-    spark.read.parquet(s"$root/merges")
+    Tables.parquet(spark, s"$root/merges")
       .orderBy("step").collect()
       .map(r => (r.getAs[String]("p1"), r.getAs[String]("p2"))).toSeq
   }

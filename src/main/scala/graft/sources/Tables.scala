@@ -1,6 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table catalog over a scale-factor directory
   * (`/root/testdata/sf*`, schemas in /root/repo/FIXTURES.md §B).
@@ -11,6 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * predicate-pushdown-able — at 100 TB the scan IS the query cost, and
   * `spark.read.parquet` + column pruning + row-group min/max skipping is the
   * difference between reading 100 TB and reading 2 TB.
+  *
+  * Footer-schema rule: every parquet read in the library goes through
+  * [[parquet]], never a schema-less `spark.read.parquet`. Spark infers a
+  * schema-less read's schema with a one-task job that opens one footer;
+  * [[parquet]] opens that same footer on the driver, converts it with
+  * Spark's own converter and hands the result to `spark.read.schema`, so a
+  * table load, an artifact read-back or an IVM state read starts no job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -28,7 +42,7 @@ object Tables {
     // them twice, harmlessly).
     graft.plans.GraftFunctions.register(spark)
     val df = if (name == "events") loadEvents(spark, dir) else
-      spark.read.parquet(path(dir, name))
+      parquet(spark, path(dir, name))
     if (wide) widen(spark, df, path(dir, name)) else df
   }
 
@@ -77,7 +91,7 @@ object Tables {
     // Harmless for µs files (only changes how NANOS columns are read).
     if (spark.conf.getOption(NanosAsLongKey).forall(_ != "true"))
       spark.conf.set(NanosAsLongKey, "true")
-    val raw = spark.read.parquet(path(dir, "events"))
+    val raw = parquet(spark, path(dir, "events"))
     normalizeTs(raw)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
@@ -114,20 +128,13 @@ object Tables {
   /** Streaming twin of [[loadEvents]]: the same parquet files as an
     * incremental file-stream source with the same ts normalization, so a
     * streaming query is plan-identical to its batch twin from the source
-    * up. The schema probe reads footers only (no job). */
-  /** Footer-probed events schema per directory. The testdata tables are
-    * immutable for a process lifetime, and the 13 streaming catalog
-    * entries (× bench warmup + reps) would otherwise re-read the footer
-    * and re-build a throwaway batch relation on every invocation. */
-  private val eventsSchemaCache =
-    new scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]
-
+    * up. The schema comes from the batch twin's [[parquet]] read: one
+    * footer on the driver, no job. */
   def loadEventsStream(spark: SparkSession, dir: String): DataFrame = {
     if (spark.conf.getOption(NanosAsLongKey).forall(_ != "true"))
       spark.conf.set(NanosAsLongKey, "true")
     graft.plans.GraftFunctions.register(spark)
-    val schema = eventsSchemaCache.getOrElseUpdate(path(dir, "events"),
-      spark.read.parquet(path(dir, "events")).schema)
+    val schema = parquet(spark, path(dir, "events")).schema
     // the testdata table is a single parquet FILE; the file-stream source
     // needs a directory or a glob PATTERN (a directory-per-table layout
     // needs neither), so wrap the filename in a {}-glob
@@ -135,6 +142,70 @@ object Tables {
     normalizeTs(raw)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
   }
+
+  /** `spark.read.parquet(path)` without Spark's schema-inference job.
+    *
+    * Spark infers a schema-less read's data schema from ONE file (when
+    * `mergeSchema` is off): `_common_metadata`, else `_metadata`, else the
+    * first data file in path order, hidden `_`/`.` entries skipped, hive
+    * partition directories (`k=v`) walked into. It reads that footer in a
+    * one-task job. This reads the same footer on the driver with the
+    * session's Hadoop conf and converts it with Spark's own
+    * `ParquetToSparkSchemaConverter` (nanos-as-long, binary-as-string,
+    * INT96, NTZ inference and the Spark row-metadata key all honoured), so
+    * the frame's schema is the one inference would give. Partition columns
+    * are not part of the footer schema: Spark still infers them from the
+    * directory names and appends them last, exactly as without a schema.
+    *
+    * Falls back to the plain schema-less read, so errors and merging stay
+    * Spark's own, when `spark.sql.parquet.mergeSchema` is on, the path is a
+    * glob or does not exist, there is no file to read, or the footer
+    * cannot be read. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
+      return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    scala.util.Try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(hadoopConf)
+      val leaves = leafFiles(fs, fs.getFileStatus(p)).sortBy(_.getPath.toString)
+      def named(n: String) = leaves.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(leaves.find(f => !isSummary(f.getPath.getName)))
+        .map { f =>
+          val meta = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          ParquetFileFormat.readSchemaFromFooter(
+            new Footer(f.getPath, meta), new ParquetToSparkSchemaConverter(conf))
+        }
+    }.toOption.flatten
+  }
+
+  private def isSummary(name: String): Boolean =
+    name == "_common_metadata" || name == "_metadata"
+
+  /** The files Spark's file index reads for a path: the path itself if it
+    * is a file, else the visible files under it and under its hive
+    * partition directories (Spark's hidden-name rule, summaries kept). */
+  private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(st.getPath).toSeq.flatMap { c =>
+      val n = c.getPath.getName
+      val hidden = ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !(n.startsWith("_common_metadata") || n.startsWith("_metadata"))
+      if (hidden) Nil
+      else if (c.isDirectory) { if (n.contains("=")) leafFiles(fs, c) else Nil }
+      else Seq(c)
+    }
 
   /** Register every table as a temp view so `spark.sql` mirrors the DuckDB
     * oracle's naming exactly. */
